@@ -27,7 +27,7 @@ sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 # yourself to override.
 os.environ.setdefault("SPARK_SUBMIT_OPTS", "-XX:ReservedCodeCacheSize=1g")
 
-from hi_csa_db_spark.session import get_spark
+from hi_csa_db_spark.session import codegen_compilations, get_spark
 import __spark_entry__ as entrymod
 
 # Headline set: the scale-sensitive queries (big shuffles, joins,
@@ -125,17 +125,24 @@ def main() -> None:
     spark = get_spark("hi-csa-db-bench")
     qs = entrymod.queries()
     # Warm-up: run every headline plan once at sf0.001 (~100x smaller).
-    # Identical plan shapes => whole-stage-codegen classes compile and
-    # JIT warms on the tiny data, so the measured pass below reflects
-    # steady-state execution (what a long-lived cluster session sees),
-    # not first-compile overhead. Warm-up is excluded from the metric.
+    # Identical plan shapes => whole-stage-codegen classes compile into
+    # Spark's codegen cache (spark.sql.codegen.cache.maxEntries, sized
+    # in session.py to hold the ~450 classes the headline and extras
+    # generate) and JIT warms on the tiny data, so the measured pass
+    # below reflects steady-state execution (what a long-lived cluster
+    # session sees), not first-compile overhead. Warm-up is excluded
+    # from the metric; "codegen_compilations" in the output counts the
+    # classes each pass still compiled.
+    compiled: dict[str, int] = {}
     warm_dir = os.environ.get("SPARK_GRAFT_WARM_DIR", "/root/testdata/sf0.001")
     if os.path.isdir(warm_dir):
+        c0 = codegen_compilations(spark)
         for name in HEADLINE:
             try:
                 qs[name](spark, warm_dir).write.format("noop").mode("overwrite").save()
             except Exception:
                 pass
+        compiled["warmup"] = codegen_compilations(spark) - c0
     # drop any cached blocks the warm-up left behind so the measured
     # pass starts from a clean block manager
     spark.catalog.clearCache()
@@ -148,6 +155,7 @@ def main() -> None:
     # meant to track.
     timings: dict[str, float] = {}
     for _pass in range(2):
+        c0 = codegen_compilations(spark)
         prev_family = None
         for name in HEADLINE:
             fam = _family(name)
@@ -160,9 +168,11 @@ def main() -> None:
             dt = round(time.time() - t0, 3)
             if name not in timings or dt < timings[name]:
                 timings[name] = dt
+        compiled[f"pass{_pass + 1}"] = codegen_compilations(spark) - c0
     total = sum(timings.values())
     extras: dict[str, float] = {}
     if os.environ.get("SPARK_GRAFT_BENCH_EXTRAS", "1") != "0":
+        c0 = codegen_compilations(spark)
         for name in HEAVY_EXTRAS:
             if name not in qs:
                 continue
@@ -175,6 +185,7 @@ def main() -> None:
                 extras[name] = round(time.time() - t0, 3)
             except Exception:
                 extras[name] = -1.0
+        compiled["extras"] = codegen_compilations(spark) - c0
     print(
         json.dumps(
             {
@@ -185,6 +196,7 @@ def main() -> None:
                 "extras": extras,
                 "extras_total": round(sum(v for v in extras.values() if v > 0), 3),
                 "passes": 2,
+                "codegen_compilations": compiled,
                 "family_fence": os.environ.get(
                     "SPARK_GRAFT_BENCH_FENCE", "1"
                 ),

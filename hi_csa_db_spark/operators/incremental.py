@@ -113,6 +113,7 @@ def maintain_rollup(
         (base_version if base_version is not None else -1) + 1,
         files,
         "rollup-merge",
+        schema=merged.schema,
     )
 
 

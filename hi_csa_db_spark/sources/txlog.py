@@ -22,8 +22,16 @@ document:
   to only the files whose key ranges intersect the updates (file
   pruning via manifest min/max stats — the documented scale path).
 
-Everything is driver-light: manifests hold file NAMES (KB-scale);
-data moves only through executor-side parquet IO.
+- **Stored schema**: each manifest records its snapshot's schema
+  (all fields nullable, as the parquet writer records it), so a read
+  hands Spark the schema instead of inferring it — no ``mergeSchema``
+  footer-scan job per snapshot resolution. File-carrying commits
+  (append, stream-append) union the base schema by name with the new
+  columns and raise on a type conflict; file-replacing commits store
+  the written frame's schema.
+
+Everything is driver-light: manifests hold file NAMES and the schema
+(KB-scale); data moves only through executor-side parquet IO.
 """
 
 from __future__ import annotations
@@ -32,8 +40,9 @@ import json
 import os
 import uuid
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, DataFrameReader, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import ArrayType, DataType, MapType, StructField, StructType
 
 
 class CommitConflict(Exception):
@@ -66,6 +75,63 @@ def _manifest(path: str, version: int) -> dict:
         return json.load(fh)
 
 
+def _as_nullable(dt: DataType) -> DataType:
+    """``dt`` with every field, array element and map value nullable —
+    the schema the parquet writer records and a read returns."""
+    if isinstance(dt, StructType):
+        return StructType(
+            [StructField(f.name, _as_nullable(f.dataType), True, f.metadata) for f in dt.fields]
+        )
+    if isinstance(dt, ArrayType):
+        return ArrayType(_as_nullable(dt.elementType), True)
+    if isinstance(dt, MapType):
+        return MapType(_as_nullable(dt.keyType), _as_nullable(dt.valueType), True)
+    return dt
+
+
+def _union_schema(base: DataType, new: DataType, where: str = "") -> DataType:
+    """Union two nullable schemas by field name, recursing into structs
+    the way ``mergeSchema`` does: base fields keep their order, new
+    fields are appended. Any other type mismatch is a conflict."""
+    if isinstance(base, StructType) and isinstance(new, StructType):
+        fields = {f.name: f for f in base.fields}
+        for f in new.fields:
+            old = fields.get(f.name)
+            dt = _union_schema(old.dataType, f.dataType, f"{where}{f.name}.") if old else f.dataType
+            fields[f.name] = StructField(f.name, dt, True, (old or f).metadata)
+        return StructType(list(fields.values()))
+    if isinstance(base, ArrayType) and isinstance(new, ArrayType):
+        return ArrayType(_union_schema(base.elementType, new.elementType, where), True)
+    if isinstance(base, MapType) and isinstance(new, MapType):
+        return MapType(
+            _union_schema(base.keyType, new.keyType, where),
+            _union_schema(base.valueType, new.valueType, where),
+            True,
+        )
+    if base != new:
+        raise TypeError(
+            f"schema conflict at {where.rstrip('.') or '<root>'}: "
+            f"{base.simpleString()} vs {new.simpleString()}"
+        )
+    return base
+
+
+def _stored_schema(manifest: dict) -> StructType | None:
+    raw = manifest.get("schema")
+    return StructType.fromJson(raw) if raw is not None else None
+
+
+def _appended_schema(path: str, base: int | None, df: DataFrame) -> StructType | None:
+    """Schema of a commit that carries the base snapshot's files and
+    adds ``df``'s: the base schema unioned with ``df``'s. None (read
+    falls back to inference) when the base predates stored schemas."""
+    new = _as_nullable(df.schema)
+    if base is None:
+        return new
+    old = _stored_schema(_manifest(path, base))
+    return _union_schema(old, new) if old is not None else None
+
+
 def _write_data_files(df: DataFrame, path: str) -> list[str]:
     """Write df as parquet into a fresh subdirectory of data/ and
     return the relative file names. Files are invisible to readers
@@ -81,14 +147,27 @@ def _write_data_files(df: DataFrame, path: str) -> list[str]:
 
 
 def _commit(
-    path: str, version: int, files: list[str], op: str, meta: dict | None = None
+    path: str,
+    version: int,
+    files: list[str],
+    op: str,
+    meta: dict | None = None,
+    schema: StructType | None = None,
 ) -> int:
     """Publish a manifest for ``version`` atomically; raise
-    CommitConflict if someone else got there first."""
+    CommitConflict if someone else got there first. ``schema`` is the
+    snapshot's schema; without one the base version's is carried
+    forward."""
     os.makedirs(_log_dir(path), exist_ok=True)
     final = os.path.join(_log_dir(path), f"v{version}.json")
     tmp = final + f".{uuid.uuid4().hex[:8]}.tmp"
     body = {"version": version, "op": op, "files": sorted(files)}
+    if schema is not None:
+        body["schema"] = _as_nullable(schema).jsonValue()
+    elif version > 0 and os.path.exists(os.path.join(_log_dir(path), f"v{version - 1}.json")):
+        base_schema = _manifest(path, version - 1).get("schema")
+        if base_schema is not None:
+            body["schema"] = base_schema
     if meta:
         body.update(meta)
     with open(tmp, "w") as fh:
@@ -111,13 +190,16 @@ def _commit(
 def write_table(df: DataFrame, path: str, mode: str = "overwrite") -> int:
     """Create or replace ('overwrite') / extend ('append') the table;
     returns the committed version."""
+    if mode not in ("overwrite", "append"):
+        raise ValueError(f"unsupported mode {mode}")
     base = current_version(path)
+    schema = _appended_schema(path, base, df) if mode == "append" else df.schema
     files = _write_data_files(df, path)
     if mode == "append" and base is not None:
         files = _manifest(path, base)["files"] + files
-    elif mode not in ("overwrite", "append"):
-        raise ValueError(f"unsupported mode {mode}")
-    return _commit(path, (base if base is not None else -1) + 1, files, mode)
+    return _commit(
+        path, (base if base is not None else -1) + 1, files, mode, schema=schema
+    )
 
 
 def append_batch(df: DataFrame, path: str, batch_id: int) -> int:
@@ -137,6 +219,7 @@ def append_batch(df: DataFrame, path: str, batch_id: int) -> int:
         last = _manifest(path, base).get("last_batch_id", -1)
         if batch_id <= last:
             return base  # replayed batch: already durable, skip
+    schema = _appended_schema(path, base, df)
     files = _write_data_files(df, path)
     if base is not None:
         files = _manifest(path, base)["files"] + files
@@ -146,6 +229,7 @@ def append_batch(df: DataFrame, path: str, batch_id: int) -> int:
         files,
         "stream-append",
         meta={"last_batch_id": max(last, batch_id)},
+        schema=schema,
     )
 
 
@@ -167,6 +251,7 @@ def replace_batch(df: DataFrame, path: str, batch_id: int) -> int:
         files,
         "replace",
         meta={"last_batch_id": max(last, batch_id)},
+        schema=df.schema,
     )
 
 
@@ -176,21 +261,32 @@ def read_table(
     """Snapshot read: resolve ONE manifest, pin its file list. Pass
     ``version`` for time travel.
 
-    Schema evolution: the snapshot is read with ``mergeSchema`` so a
-    table whose later commits added columns surfaces the union schema,
-    old files null-filling the new columns — the additive-evolution
-    contract Delta/Iceberg readers give. (Column renames/drops are a
+    Schema evolution: the snapshot is read with the manifest's stored
+    schema, so a table whose later commits added columns surfaces the
+    union schema, old files null-filling the new columns — the
+    additive-evolution contract Delta/Iceberg readers give, without a
+    footer-inference job. (A snapshot of more files than
+    ``spark.sql.sources.parallelPartitionDiscovery.threshold``, 32 by
+    default, still starts Spark's parallel file-listing job.)
+    Manifests written before schemas were stored fall back to
+    ``mergeSchema`` inference. (Column renames/drops are a
     metadata problem this minimal format does not model; additive drift
     is the case ingest pipelines actually hit.)"""
     v = version if version is not None else current_version(path)
     if v is None:
         raise FileNotFoundError(f"no committed version at {path}")
-    files = _manifest(path, v)["files"]
-    if not files:
+    m = _manifest(path, v)
+    if not m["files"]:
         raise FileNotFoundError(f"version {v} of {path} is empty")
-    return spark.read.option("mergeSchema", "true").parquet(
-        *[os.path.join(path, f) for f in files]
-    )
+    return _reader(spark, m).parquet(*[os.path.join(path, f) for f in m["files"]])
+
+
+def _reader(spark: SparkSession, manifest: dict) -> DataFrameReader:
+    """Parquet reader pinned to the snapshot's stored schema."""
+    schema = _stored_schema(manifest)
+    if schema is None:
+        return spark.read.option("mergeSchema", "true")
+    return spark.read.schema(schema)
 
 
 def merge_table(
@@ -209,7 +305,7 @@ def merge_table(
         updates.select(F.col(key).alias("__mk")), cur[key] == F.col("__mk"), "left_anti"
     ).unionByName(updates)
     files = _write_data_files(merged, path)
-    return _commit(path, base + 1, files, "merge")
+    return _commit(path, base + 1, files, "merge", schema=merged.schema)
 
 
 def compact_table(
@@ -229,7 +325,7 @@ def compact_table(
     # arriving right after a compaction must still be recognized
     last = _manifest(path, base).get("last_batch_id", -1)
     meta = {"last_batch_id": last} if last >= 0 else None
-    return _commit(path, base + 1, files, "compact", meta=meta)
+    return _commit(path, base + 1, files, "compact", meta=meta, schema=cur.schema)
 
 
 def file_stats(path: str, version: int | None = None) -> dict[str, dict]:
@@ -288,7 +384,7 @@ def read_table_pruned(
     if not keep:
         # preserve the snapshot schema with zero partitions scanned
         return read_table(spark, path, v).filter(F.lit(False))
-    df = spark.read.option("mergeSchema", "true").parquet(
+    df = _reader(spark, _manifest(path, v)).parquet(
         *[os.path.join(path, f) for f in keep]
     )
     return df.filter((F.col(col) >= lo) & (F.col(col) <= hi))

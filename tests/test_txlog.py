@@ -195,3 +195,92 @@ def test_replay_after_compaction_still_skipped(spark, tmp_path):
     txlog.append_batch(_df(spark, [(2, "b")]), path, batch_id=1)
     assert txlog.current_version(path) == v
     assert txlog.read_table(spark, path).count() == 2
+
+
+def _jobs_started(spark, fn):
+    """Run ``fn`` under a fresh job group; return (result, job count)."""
+    import uuid
+
+    sc = spark.sparkContext
+    group = f"txlog-{uuid.uuid4().hex[:8]}"
+    sc.setJobGroup(group, "txlog snapshot resolution")
+    try:
+        out = fn()
+    finally:
+        for prop in ("spark.jobGroup.id", "spark.job.description"):
+            sc.setLocalProperty(prop, None)
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_stored_schema_matches_inference_and_reads_start_no_job(spark, tmp_path):
+    import datetime
+    from decimal import Decimal
+
+    from hi_csa_db_spark.operators import incremental
+
+    path = str(tmp_path / "t")
+    ts = datetime.datetime(2024, 5, 1, 12, 30)
+    base_ddl = "k long, amt decimal(12,2), ts timestamp, meta struct<src:string,n:int>"
+    base = spark.createDataFrame(
+        [(1, Decimal("1.50"), ts, ("a", 1)), (2, Decimal("2.25"), ts, ("b", 2))], base_ddl
+    )
+    txlog.write_table(base, path)
+    # additive evolution: a new top-level column, then a new nested field
+    # and a nested array column in a stream append
+    txlog.write_table(
+        spark.createDataFrame([(3, Decimal("3.00"), ts, ("c", 3), 0.5)], base_ddl + ", score double"),
+        path,
+        mode="append",
+    )
+    txlog.append_batch(
+        spark.createDataFrame(
+            [(4, Decimal("4.75"), ts, ("d", 4, "en"), 0.25, [("x", 1)])],
+            "k long, amt decimal(12,2), ts timestamp, meta struct<src:string,n:int,lang:string>,"
+            " score double, tags array<struct<t:string,w:int>>",
+        ),
+        path,
+        batch_id=0,
+    )
+    evolved = txlog.read_table(spark, path)
+    txlog.merge_table(spark, path, evolved.filter("k = 2").withColumn("score", F.lit(9.0)), key="k")
+    txlog.compact_table(spark, path)
+    # a schema-less commit carries the base schema forward
+    last = txlog.current_version(path)
+    txlog._commit(path, last + 1, txlog._manifest(path, last)["files"], "overwrite")
+    rollup = str(tmp_path / "rollup")
+    for _ in range(2):  # create, then the direct rollup-merge commit
+        incremental.maintain_rollup(spark, rollup, base, ["k"], "amt")
+
+    checked = 0
+    for tbl in (path, rollup):
+        for v in range(txlog.current_version(tbl) + 1):
+            files = [os.path.join(tbl, f) for f in txlog._manifest(tbl, v)["files"]]
+            assert "schema" in txlog._manifest(tbl, v)
+            inferred, inference_jobs = _jobs_started(
+                spark, lambda: spark.read.option("mergeSchema", "true").parquet(*files).schema
+            )
+            snap, jobs = _jobs_started(spark, lambda: txlog.read_table(spark, tbl, v))
+            assert snap.schema == inferred, (tbl, v)
+            assert inference_jobs >= 1  # the job counter sees what it should
+            assert jobs == 0, (tbl, v)
+            checked += 1
+    assert checked == 8
+
+    rows = {r["k"]: r for r in txlog.read_table(spark, path).collect()}
+    assert rows[1]["score"] is None and rows[1]["tags"] is None
+    assert rows[1]["meta"]["lang"] is None and rows[4]["meta"]["lang"] == "en"
+    assert rows[2]["score"] == 9.0 and rows[4]["amt"] == Decimal("4.75")
+    assert rows[4]["tags"][0]["w"] == 1 and rows[3]["ts"] == ts
+
+
+def test_append_with_conflicting_type_raises_before_writing(spark, tmp_path):
+    path = str(tmp_path / "t")
+    txlog.write_table(_df(spark, [(1, "a")]), path)
+    n_batches = len(os.listdir(os.path.join(path, "data")))
+    clash = spark.createDataFrame([("2", "b")], "k string, val string")
+    with pytest.raises(TypeError, match="schema conflict at k"):
+        txlog.write_table(clash, path, mode="append")
+    with pytest.raises(TypeError, match="schema conflict at k"):
+        txlog.append_batch(clash, path, batch_id=0)
+    assert txlog.current_version(path) == 0
+    assert len(os.listdir(os.path.join(path, "data"))) == n_batches
